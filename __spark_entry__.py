@@ -2640,8 +2640,8 @@ def _q_skew_stats(spark, sf):
     """Skew diagnosis: top user_ids by event count with corpus-level
     context (share, max/mean skew ratio) — two map-side-combined
     aggregates + TakeOrderedAndProject, never a collect. The MEASURE
-    half of the explicit skew handling the engine's O9 salting is the
-    repair for."""
+    half of the explicit skew handling; ``salted_join`` below is the
+    repair."""
     from webcrawler_spark.operators.skew import key_skew_stats
 
     ev = spark.read.parquet(f"{sf}/events.parquet")

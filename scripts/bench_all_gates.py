@@ -3,14 +3,13 @@
 Runs the 240k-page bench crawl twice back-to-back on the same corpus
 and JVM shape: once with the reference-parity default config, once
 with EVERY opt-in feature enabled (trap filter, sitemap probing,
-URL blocklist + word weights, cuckoo seen-filter, salted selection,
-pagerank priority mode over the full host set, compaction + GC,
-bounded output files, metrics). The bench corpus contains no trap
-hosts, no sitemap files, and nothing matching the blocklist/word
-weights, so the gates must be SEMANTICALLY INERT here: page/URL
-counts must match the plain run exactly (the parity count the ask
-names), and the delta between the two walls is the total machinery
-cost of running every gate at 240k-page scale.
+URL blocklist + word weights, pagerank priority mode over the full
+host set, compaction + GC, bounded output files, metrics). The bench
+corpus contains no trap hosts, no sitemap files, and nothing matching
+the blocklist/word weights, so the gates must be SEMANTICALLY INERT
+here: page/URL counts must match the plain run exactly (the parity
+count the ask names), and the delta between the two walls is the total
+machinery cost of running every gate at 240k-page scale.
 
 Usage: python scripts/bench_all_gates.py [out.json]
 Env:   SPARK_GRAFT_SCALE_DIR  corpus dir (default /tmp/bigweb-r04-scale)
@@ -84,8 +83,6 @@ def main() -> None:
             use_sitemaps=True,
             url_blocklist=["blocked.invalid"],
             url_word_weights={"casino": 0.6, "poker": 0.5},
-            seen_filter="cuckoo",
-            salt_n=2,
             priority_mode="pagerank",
             priority_refresh_rounds=4,
             hosts_per_round=HOSTS,       # rank the FULL host set

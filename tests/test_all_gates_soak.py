@@ -1,12 +1,12 @@
 """ALL-gates-on soak (round-4 verdict ask #8): every opt-in engine
 feature enabled simultaneously on one durable crawl — trap filter,
-sitemap seeding, URL blocklist + word weights, cuckoo seen-filter,
-salted FIFO selection, pagerank priority mode, compaction + GC,
-bounded output files, metrics — to shake out feature interactions the
-per-feature e2e tests cannot see (e.g. a trap-flagged host that is
-ALSO a sitemap seed; blocklisted links discovered from sitemap-only
-pages). Asserts the gates all fire on one history, the catalog
-footprint stays bounded, and resume still works."""
+sitemap seeding, URL blocklist + word weights, pagerank priority
+mode, compaction + GC, bounded output files, metrics — to shake out
+feature interactions the per-feature e2e tests cannot see (e.g. a
+trap-flagged host that is ALSO a sitemap seed; blocklisted links
+discovered from sitemap-only pages). Asserts the gates all fire on
+one history, the catalog footprint stays bounded, and resume still
+works."""
 
 from __future__ import annotations
 
@@ -118,8 +118,6 @@ def soak(spark, gate_web, tmp_path_factory):
         use_sitemaps=True,
         url_blocklist=["bad.example"],
         url_word_weights={"casino": 0.6, "poker": 0.5},
-        seen_filter="cuckoo",
-        salt_n=2,
         compact_seen_every=6,
         gc_keep_rounds=4,
         records_per_file=50,

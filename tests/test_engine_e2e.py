@@ -142,20 +142,6 @@ def test_budget_limit_exact(spark, pages, simres):
     assert {r["url"] for r in fetched} <= set(simres.texts)
 
 
-def test_salted_selection_equivalent(spark, pages):
-    """O9: mega-host salting (two-phase FIFO top-B) must not change the
-    crawl outcome, only the physical plan."""
-    eng_plain = CrawlEngine(spark, pages, config=CrawlConfig(max_rounds=40))
-    eng_plain.run(seeds_df(spark))
-    eng_salt = CrawlEngine(
-        spark, pages, config=CrawlConfig(max_rounds=40, salt_n=4)
-    )
-    eng_salt.run(seeds_df(spark))
-    a = {(r["url"], r["fetched"]) for r in eng_plain.seen().collect()}
-    b = {(r["url"], r["fetched"]) for r in eng_salt.seen().collect()}
-    assert a == b
-
-
 def test_wave_join_fallback_equivalent(spark, pages):
     """O13: forcing every wave join down the shuffle-hash fallback
     (wave_broadcast_max_rows=0) must produce the identical crawl —
@@ -188,49 +174,3 @@ def test_many_hosts_round(spark):
     assert robots.count() == n_hosts
     assert robots.select("host").distinct().count() == n_hosts
     assert eng.state.total_fetched > 0
-
-
-def test_bloom_path_equivalent(spark, pages):
-    """O5: Bloom pre-filtered J1 produces the identical crawl (no false
-    drops — SURVEY.md §7.4(4))."""
-    eng = CrawlEngine(
-        spark, pages, config=CrawlConfig(max_rounds=40, use_bloom=True)
-    )
-    eng.run(seeds_df(spark))
-    plain = CrawlEngine(spark, pages, config=CrawlConfig(max_rounds=40))
-    plain.run(seeds_df(spark))
-    assert (
-        {(r["url"], r["fetched"]) for r in eng.seen().collect()}
-        == {(r["url"], r["fetched"]) for r in plain.seen().collect()}
-    )
-
-
-def test_cuckoo_path_equivalent(spark, pages):
-    """O5 cuckoo variant: same identical-crawl guarantee as the Bloom
-    pre-pass (tests/test_cuckoo.py pins the filter's own properties)."""
-    eng = CrawlEngine(
-        spark, pages, config=CrawlConfig(max_rounds=40, seen_filter="cuckoo")
-    )
-    eng.run(seeds_df(spark))
-    plain = CrawlEngine(spark, pages, config=CrawlConfig(max_rounds=40))
-    plain.run(seeds_df(spark))
-    assert (
-        {(r["url"], r["fetched"]) for r in eng.seen().collect()}
-        == {(r["url"], r["fetched"]) for r in plain.seen().collect()}
-    )
-
-
-def test_apply_in_pandas_politeness_equivalent(spark, pages):
-    """north_star fetch-executor shape: the applyInPandas grouped-map
-    politeness path produces the identical crawl (same seen set, same
-    attempt timestamps) as the native window path."""
-    native = CrawlEngine(spark, pages, config=CrawlConfig(max_rounds=40))
-    native.run(seeds_df(spark))
-    cfg = CrawlConfig(max_rounds=40, fetch_executor="apply_in_pandas")
-    grouped = CrawlEngine(spark, pages, config=cfg)
-    grouped.run(seeds_df(spark))
-    a = {(r["url"], r["fetched"], round(r["attempt_ts"], 5))
-         for r in native.seen().collect()}
-    b = {(r["url"], r["fetched"], round(r["attempt_ts"], 5))
-         for r in grouped.seen().collect()}
-    assert a == b

@@ -17,6 +17,8 @@ one of these shapes the suite fails loudly with the operator name.
 
 from __future__ import annotations
 
+import math
+
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -98,6 +100,59 @@ def test_wave_join_broadcasts_small_waves(spark, full_plans):
     big = _plan(eng._wave_join(eng.pages_meta, wave, "url", "inner", 1000))
     assert "ShuffledHashJoin" in big and "SortMergeJoin" not in big
     assert "BroadcastHashJoin" not in big
+
+
+def test_mega_host_selection_is_map_side_top_b(spark, full_plans):
+    """O9 mega-host skew: the W1/W3 per-host top-B selection must plan a
+    map-side WindowGroupLimit (Partial) BELOW the host exchange, so a
+    3,000-URL host ships at most B rows per map task to its window, and
+    scale mode (hosts_per_round=None) has no single-partition stage.
+    The rows are exactly the first B URLs per host in discovered_seq
+    order, B = min(max_urls_per_host_per_round, floor(window/delay))."""
+    from webcrawler_spark.engine import CrawlConfig, CrawlEngine
+
+    pages = spark.createDataFrame(
+        [], "url string, html binary, status int, content_type string"
+    )
+    cfg = CrawlConfig(max_urls_per_host_per_round=30, round_window=3.0)
+    eng = CrawlEngine(spark, pages, config=cfg)
+    mega, small = "https://mega.example", [f"https://s{h}.example" for h in range(5)]
+    rows = [(f"{mega}/p{i}", mega, 3000 - i) for i in range(3000)]
+    rows += [(f"{h}/p{i}", h, 100 + (i * 7) % 10) for h in small for i in range(10)]
+    frontier = spark.createDataFrame(
+        [(u, h, u[len(h):], 0, 1, s) for u, h, s in rows],
+        "url string, host string, resource string, bucket int, depth int,"
+        " discovered_seq long",
+    ).repartition(4)
+    delay = {mega: 0.1, **{h: 1.0 for h in small}}   # B = 30 and 3
+    host_state = spark.createDataFrame(
+        [(h, d, 0.0, False) for h, d in delay.items()],
+        "host string, delay double, priority double, ever_popped boolean",
+    )
+
+    cand = eng._select_wave(frontier, host_state)
+    got = sorted((r["host"], r["rn_host"], r["url"]) for r in cand.collect())
+
+    expect = []
+    for h, d in delay.items():
+        fifo = sorted((s, u) for u, hh, s in rows if hh == h)
+        b = min(cfg.max_urls_per_host_per_round, math.floor(cfg.round_window / d))
+        expect += [(h, i + 1, u) for i, (_, u) in enumerate(fifo[:b])]
+    assert got == sorted(expect)
+
+    plan = _plan(cand)  # the executed (final adaptive) plan
+    lines = plan.splitlines()
+    exch = next(
+        i for i, ln in enumerate(lines) if "Exchange hashpartitioning(host" in ln
+    )
+    partial = [
+        i for i, ln in enumerate(lines)
+        if "WindowGroupLimit" in ln and ln.rstrip().endswith("Partial")
+    ]
+    assert partial and partial[0] > exch, plan
+    indent = lambda ln: len(ln) - len(ln.lstrip(" :+-"))  # noqa: E731
+    assert indent(lines[partial[0]]) > indent(lines[exch]), plan
+    assert "SinglePartition" not in plan, plan
 
 
 def test_prefix_count_plan_is_distributed(spark, full_plans):

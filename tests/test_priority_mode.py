@@ -118,6 +118,56 @@ def test_other_modes_complete_with_identical_coverage(
     assert set(_fetch_rounds(eng)) == set(fifo_rounds)
 
 
-def test_unknown_mode_raises(spark, rank_web):
+def test_unknown_mode_raises():
+    # rejected when the config is built, before any crawl work
     with pytest.raises(ValueError, match="priority_mode"):
-        _crawl(spark, rank_web, priority_mode="bogus")
+        CrawlConfig(hosts_per_round=N_SEEDS, priority_mode="bogus")
+
+
+@pytest.mark.parametrize("mode", ["pagerank", "opic", "recrawl"])
+def test_ranked_mode_without_host_limit_raises(mode):
+    # scale mode (hosts_per_round=None) has no W1 window to reorder,
+    # so a ranked mode there would be silently ignored for ever
+    with pytest.raises(ValueError, match="hosts_per_round"):
+        CrawlConfig(priority_mode=mode)
+
+
+def test_empty_per_host_budget_raises():
+    with pytest.raises(ValueError, match="max_urls_per_host_per_round"):
+        CrawlConfig(max_urls_per_host_per_round=0)
+
+
+def test_recrawl_rank_weighs_each_url_once(spark):
+    """priority_mode="recrawl" ranks a host by the mean p_stale of its
+    DISTINCT URLs: a URL fetched in several rounds has one staleness
+    and must not outweigh its host's other URLs."""
+    from webcrawler_spark.operators.recrawl import recrawl_priority
+
+    a, b = "https://a.example", "https://b.example"
+    fetched = [(f"{a}/hot", a, r, f"v{r}") for r in range(4)]   # 4 changes
+    fetched += [(f"{a}/cold", a, 0, "same"), (f"{b}/x", b, 1, "x")]
+    pages_fetched = spark.createDataFrame(
+        fetched, "url string, host string, round int, text string"
+    )
+    pages = spark.createDataFrame(
+        [], "url string, html binary, status int, content_type string"
+    )
+    eng = CrawlEngine(
+        spark, pages,
+        config=CrawlConfig(hosts_per_round=1, priority_mode="recrawl"),
+    )
+    eng.cat.overwrite("pages_fetched", pages_fetched)
+    eng.state.round = 6
+    eng._refresh_host_ranks()
+    got = {r["host"]: r["rank_score"] for r in eng._rank_df.collect()}
+
+    p = {
+        r["url"]: r["p_stale"]
+        for r in recrawl_priority(
+            pages_fetched.select("url", "round", F.md5("text").alias("digest")),
+            now_round=6,
+        ).collect()
+    }
+    assert p[f"{a}/hot"] != pytest.approx(p[f"{a}/cold"])
+    assert got[a] == pytest.approx((p[f"{a}/hot"] + p[f"{a}/cold"]) / 2)
+    assert got[b] == pytest.approx(p[f"{b}/x"])

@@ -4,14 +4,14 @@ A from-scratch rebuild of the capabilities of Pendulun/WebCrawler
 (a threaded polite crawler; see SURVEY.md) re-expressed Spark-first:
 
 * the thread-per-worker frontier becomes a driver-side BSP round loop —
-  one Spark job per round over snapshot tables (``catalog.py``);
+  one Spark job per round over snapshot tables (``engine.py`` over
+  ``tables.py``);
 * cross-thread mailboxes/locks become the shuffle;
-* the in-memory priority heap becomes window ranks over a frontier table
-  (``operators/frontier.py``);
-* the URL-seen set becomes a Bloom-prefiltered anti-join
-  (``operators/seen.py``);
+* the in-memory priority heap becomes window ranks over a frontier table;
+* the URL-seen set becomes an exact left-anti join against a seen table;
 * fetching the live web becomes an equi-join against an offline
-  Common-Crawl-style ``pages`` table (``operators/fetch.py``).
+  Common-Crawl-style ``pages`` table (or, with a transport plugged in,
+  a per-host applyInPandas fetch executor).
 
 Plus the large-scale training-data operators a 100 TB corpus pipeline
 needs: dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard), ANN

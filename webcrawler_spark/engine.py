@@ -18,8 +18,9 @@ Scheduling semantics implemented (citations → /root/reference/):
 Virtual clock: all politeness is computed in *virtual seconds* with
 native window arithmetic (no sleeps, no wall clock), which makes runs
 deterministic and lets the offline bench crank through simulated hours
-in wall-clock seconds. A live deployment flips ``live_politeness`` to
-sleep inside the applyInPandas fetch executor instead (same law).
+in wall-clock seconds. A live crawl (``transport`` set) applies the same
+law inside its applyInPandas fetch executor, also in virtual time: it
+does not wait out the delays in wall-clock seconds.
 
 Determinism contract (§5.3): with ``sequential_parity_mode()`` config
 (one host, one URL per round) the engine reproduces the reference
@@ -38,15 +39,15 @@ Scale design (10^10 URLs, 1000 executors):
   (url, status, content_type) and the html column is joined *only for
   fetched rows* — the reference's HEAD-before-GET two-phase fetch
   becomes column pruning (O2).
-* the seen anti-join takes the partitioned-Bloom pre-pass (O5) when
-  ``use_bloom``; mega-host skew is broken by two-phase salted FIFO
-  selection (O9) when ``salt_n > 1``.
+* J1 is one exact left-anti join against the seen table; mega-host
+  skew (O9) is bounded by the per-host top-B filter, which Spark plans
+  as a map-side ``WindowGroupLimit`` (Partial before the host exchange,
+  Final after it), so no host ships more than B rows to its window.
 """
 
 from __future__ import annotations
 
-import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Optional
 
 import pandas as pd
@@ -55,8 +56,6 @@ from pyspark.sql import functions as F
 
 from webcrawler_spark.functions.parse import parse_page_udf
 from webcrawler_spark.functions.robots import (
-    MAX_DELAY_SECONDS,
-    MIN_DELAY_SECONDS,
     clamp_delay,
     parse_robots,
     robots_allowed_udf,
@@ -67,7 +66,6 @@ from webcrawler_spark.functions.urltools import (
     normalize_url_udf,
     resource_col,
 )
-from webcrawler_spark.operators.bloom import anti_join_with_bloom
 from webcrawler_spark.operators.prefix import attach_prefix_count
 from webcrawler_spark.simulator import VIRTUAL_CLOCK_START
 from webcrawler_spark.sparkutil import checkpoint, free
@@ -102,13 +100,6 @@ class CrawlConfig:
     max_urls_per_host_per_round: int = 50
     round_window: float = 3.0            # virtual seconds per round (W4 budget)
     n_buckets: int = 8                   # host-hash bucket count (O12)
-    use_bloom: bool = False              # O5 seen pre-filter
-    # O5 variant selector: None defers to use_bloom; "bloom" | "cuckoo"
-    # pick the probabilistic pre-pass (cuckoo supports deletion —
-    # operators/cuckoo.py — for revisit policies); both are routing
-    # accelerators over the same exact anti-join semantics.
-    seen_filter: Optional[str] = None
-    salt_n: int = 1                      # O9 two-phase FIFO selection fan
     # trap filtering (opt-in; default OFF preserves reference-ordering
     # parity): drop hosts whose fetched content is mostly duplicate —
     # the Mercator/IRLbot crawler-trap signal (operators/traps.py),
@@ -164,13 +155,6 @@ class CrawlConfig:
     priority_rank_iters: int = 5
     collect_metrics: bool = True         # S7 per-round metrics table
     agent: str = "*"                     # Host.py:9
-    # W4 executor: "native" = window-arithmetic virtual clock (codegen,
-    # default); "apply_in_pandas" = grouped-map per-host executor — the
-    # shape a LIVE crawler needs, where the group function can actually
-    # time.sleep between fetches (live_politeness) and call out to the
-    # network. Both produce identical timestamps (tested).
-    fetch_executor: str = "native"
-    live_politeness: bool = False        # real sleeps inside the group fn
     # LIVE transport plug (sources/transport.py): an object exposing
     # head(url) / get(url) per the reference's access contract
     # (WebAccesser.py:35-100). When set, the round's HEAD probe (S3)
@@ -201,6 +185,29 @@ class CrawlConfig:
     # executor memory and fail the round. 0 forces the fallback path
     # everywhere (used by the equivalence test).
     wave_broadcast_max_rows: int = 4_000_000
+
+    PRIORITY_MODES = ("fifo", "pagerank", "opic", "recrawl")
+
+    def __post_init__(self) -> None:
+        """Reject a configuration the engine would otherwise ignore or
+        fail on only after crawling: an unknown priority_mode, a ranked
+        mode without the host-limited W1 window that applies it, and a
+        per-host budget that schedules nothing."""
+        if self.priority_mode not in self.PRIORITY_MODES:
+            raise ValueError(
+                f"unknown priority_mode {self.priority_mode!r}"
+                f" (expected {' | '.join(self.PRIORITY_MODES)})"
+            )
+        if self.priority_mode != "fifo" and self.hosts_per_round is None:
+            raise ValueError(
+                f"priority_mode {self.priority_mode!r} ranks hosts only in"
+                " host-limited rounds: set hosts_per_round"
+            )
+        if self.max_urls_per_host_per_round < 1:
+            raise ValueError(
+                "max_urls_per_host_per_round must be >= 1, got"
+                f" {self.max_urls_per_host_per_round}"
+            )
 
     @staticmethod
     def sequential_parity_mode(limit: Optional[int] = None) -> "CrawlConfig":
@@ -358,45 +365,6 @@ class CrawlEngine:
             return big.join(small.hint("shuffle_hash"), on, how)
         return big.join(F.broadcast(small), on, how)
 
-    def _politeness_apply_in_pandas(self, sel: DataFrame, t_round: float) -> DataFrame:
-        """W4 as a grouped-map executor (north_star shape): one pandas
-        group per host runs its FIFO serially, assigning attempt
-        timestamps under the politeness law — and, in live mode,
-        actually sleeping out the delays (Worker.py:209-216). The
-        virtual-time math is identical to the native window path.
-
-        Skew note (O9): a mega-host group is bounded by the per-round
-        budget (max_urls_per_host_per_round), so no group exceeds
-        budget rows regardless of frontier skew.
-        """
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        out_schema = StructType(
-            list(sel.schema.fields) + [StructField("attempt_ts", DoubleType())]
-        )
-        live = self.cfg.live_politeness
-
-        def run_host(pdf: pd.DataFrame) -> pd.DataFrame:
-            import time as _time
-
-            pdf = pdf.sort_values("rn_host").reset_index(drop=True)
-            start = max(t_round, float(pdf["priority"].iloc[0]))
-            delay = float(pdf["delay"].iloc[0])
-            ts, consumed = [], 0
-            for sa in pdf["should_access"]:
-                t = start + consumed * delay
-                ts.append(t)
-                if bool(sa):
-                    if live:
-                        wait = t - _time.time()
-                        if wait > 0:
-                            _time.sleep(min(wait, 30.0))
-                    consumed += 1
-            pdf["attempt_ts"] = ts
-            return pdf
-
-        return sel.groupBy("host").applyInPandas(run_host, out_schema)
-
     def _fetch_apply_in_pandas_live(
         self, sel: DataFrame, t_round: float
     ) -> DataFrame:
@@ -412,9 +380,10 @@ class CrawlEngine:
         content gate (F3, WebAccesser.py:100), 2xx gate (F4,
         WebAccesser.py:92-96), and the identical virtual-clock
         politeness law — so a FakeTransport over the same corpus
-        yields a byte-identical crawl (tests/test_live_fetch.py).
-        ``live_politeness=True`` additionally sleeps the delays out in
-        wall time (Worker.py:209-216).
+        yields a byte-identical crawl (tests/test_live_fetch.py). The
+        law assigns virtual timestamps only; nothing here sleeps, so
+        the reference's wall-clock wait (Worker.py:209-216) is not
+        reproduced.
 
         Skew note (O9): one pandas group per host, bounded by the
         per-round budget, so no group exceeds budget rows; hosts fan
@@ -443,11 +412,8 @@ class CrawlEngine:
             ]
         )
         transport = self.cfg.transport
-        live = self.cfg.live_politeness
 
         def run_host(pdf: pd.DataFrame) -> pd.DataFrame:
-            import time as _time
-
             pdf = pdf.sort_values("rn_host").reset_index(drop=True)
             start = max(t_round, float(pdf["priority"].iloc[0]))
             delay = float(pdf["delay"].iloc[0])
@@ -472,10 +438,6 @@ class CrawlEngine:
                 body = None
                 fetched = False
                 if should:
-                    if live:
-                        wait = t - _time.time()
-                        if wait > 0:
-                            _time.sleep(min(wait, 30.0))
                     consumed += 1
                     if 200 <= status < 300:                      # F4
                         g = transport.get(row.url)               # S4
@@ -792,23 +754,21 @@ class CrawlEngine:
                     F.col("node").alias("host"),
                     F.col("importance").alias("rank_score"),
                 )
-        elif cfg.priority_mode == "recrawl":
+        else:  # "recrawl" (CrawlConfig admits no other non-fifo mode)
             from webcrawler_spark.operators.recrawl import recrawl_priority
 
             hist = pages.select(
                 "url", "round", F.md5("text").alias("digest")
             )
             pri = recrawl_priority(hist, now_round=st.round)
+            # one row per URL: a URL fetched in several rounds has one
+            # p_stale and must weigh once in its host's mean
             rank = (
                 pages.select("url", "host")
+                .distinct()
                 .join(pri, "url")
                 .groupBy("host")
                 .agg(F.avg("p_stale").alias("rank_score"))
-            )
-        else:
-            raise ValueError(
-                f"unknown priority_mode {cfg.priority_mode!r}"
-                " (expected fifo | pagerank | opic | recrawl)"
             )
         old = self._rank_df
         self._rank_df = checkpoint(rank)
@@ -884,6 +844,74 @@ class CrawlEngine:
         )
 
     # ------------------------------------------------------------------
+    # scheduling (J2 + W1/W3)
+    # ------------------------------------------------------------------
+    def _select_wave(self, frontier: DataFrame, host_state: DataFrame) -> DataFrame:
+        """J2 + W1/W3: this round's candidate rows — per host, the first
+        B URLs in discovered_seq (FIFO) order, B being the round's
+        politeness budget; in host-limited mode only the hosts_per_round
+        first hosts in W1 order. Adds ``rn_host`` (1-based FIFO rank)."""
+        cfg, st = self.cfg, self.state
+        # J2: slim scheduling join (no robots bodies) — broadcast while
+        # the host universe fits, shuffle-hash on host past the gate
+        cand = self._wave_join(
+            frontier, host_state, "host", "inner", st.total_hosts
+        )
+        w_host = Window.partitionBy("host").orderBy("discovered_seq")
+        cand = cand.withColumn("rn_host", F.row_number().over(w_host))
+
+        # per-host politeness budget for this round (W4)
+        budget = F.least(
+            F.lit(cfg.max_urls_per_host_per_round),
+            F.greatest(
+                F.lit(1),
+                F.floor(
+                    F.lit(cfg.round_window)
+                    / F.greatest(F.col("delay"), F.lit(1e-6))
+                ),
+            ).cast("int"),
+        )
+        # O9: the literal conjunct is implied by the budget (which never
+        # exceeds max_urls_per_host_per_round) but, being foldable, lets
+        # Spark's InferWindowGroupLimit plan a map-side per-host top-B
+        # (WindowGroupLimit Partial) before the host exchange, so a
+        # mega-host ships at most B rows per map task to its window
+        cand = cand.filter(
+            (F.col("rn_host") <= F.lit(cfg.max_urls_per_host_per_round))
+            & (F.col("rn_host") <= budget)
+        )
+
+        if cfg.hosts_per_round is not None:
+            # W1 strict host rank — only used in host-limited mode
+            # (global sort of the distinct-host set; skipped in scale
+            # mode). Under priority_mode != "fifo" the order becomes
+            # (rank_score DESC, priority, host): importance-aware
+            # crawling, high-rank hosts scheduled first.
+            host_set = cand.select("host", "priority").distinct()
+            order = [F.col("priority"), F.col("host")]
+            if cfg.priority_mode != "fifo":
+                self._refresh_host_ranks()
+                if self._rank_df is not None:
+                    host_set = self._wave_join(
+                        host_set, self._rank_df, "host", "left",
+                        st.total_hosts,
+                    ).withColumn(
+                        "rank_score",
+                        F.coalesce("rank_score", F.lit(-1.0)),
+                    )
+                    order = [F.desc("rank_score")] + order
+            hosts_ranked = (
+                host_set
+                .withColumn(
+                    "host_rank",
+                    F.row_number().over(Window.orderBy(*order)),
+                )
+                .filter(F.col("host_rank") <= cfg.hosts_per_round)
+            )
+            cand = cand.join(F.broadcast(hosts_ranked.select("host")), "host")
+        return cand
+
+    # ------------------------------------------------------------------
     # one round (SURVEY.md §3.2 rebuild pipeline)
     # ------------------------------------------------------------------
     def run_round(self) -> dict:
@@ -955,68 +983,7 @@ class CrawlEngine:
         # advance the clock (Worker.py:209-216 waits only on fetches);
         # the per-row greatest(clock, priority) below is the wait.
         t_round = st.clock
-        # J2: slim scheduling join (no robots bodies) — broadcast while
-        # the host universe fits, shuffle-hash on host past the gate
-        cand = self._wave_join(
-            frontier, host_state, "host", "inner", st.total_hosts
-        )
-
-        if cfg.salt_n > 1:
-            # O9: two-phase top-B per host so one mega-host cannot
-            # serialize a single window task. Phase 1 ranks within
-            # (host, salt); phase 2 ranks the ≤ salt_n*B survivors.
-            budget_max = cfg.max_urls_per_host_per_round
-            salt = F.pmod(F.xxhash64("url"), F.lit(cfg.salt_n))
-            w1 = Window.partitionBy("host", salt).orderBy("discovered_seq")
-            cand = (
-                cand.withColumn("_rs", F.row_number().over(w1))
-                .filter(F.col("_rs") <= budget_max)
-                .drop("_rs")
-            )
-        w_host = Window.partitionBy("host").orderBy("discovered_seq")
-        cand = cand.withColumn("rn_host", F.row_number().over(w_host))
-
-        # per-host politeness budget for this round (W4)
-        budget = F.least(
-            F.lit(cfg.max_urls_per_host_per_round),
-            F.greatest(
-                F.lit(1),
-                F.floor(
-                    F.lit(cfg.round_window)
-                    / F.greatest(F.col("delay"), F.lit(1e-6))
-                ),
-            ).cast("int"),
-        )
-        cand = cand.filter(F.col("rn_host") <= budget)
-
-        if cfg.hosts_per_round is not None:
-            # W1 strict host rank — only used in host-limited mode
-            # (global sort of the distinct-host set; skipped in scale
-            # mode). Under priority_mode != "fifo" the order becomes
-            # (rank_score DESC, priority, host): importance-aware
-            # crawling, high-rank hosts scheduled first.
-            host_set = cand.select("host", "priority").distinct()
-            order = [F.col("priority"), F.col("host")]
-            if cfg.priority_mode != "fifo":
-                self._refresh_host_ranks()
-                if self._rank_df is not None:
-                    host_set = self._wave_join(
-                        host_set, self._rank_df, "host", "left",
-                        st.total_hosts,
-                    ).withColumn(
-                        "rank_score",
-                        F.coalesce("rank_score", F.lit(-1.0)),
-                    )
-                    order = [F.desc("rank_score")] + order
-            hosts_ranked = (
-                host_set
-                .withColumn(
-                    "host_rank",
-                    F.row_number().over(Window.orderBy(*order)),
-                )
-                .filter(F.col("host_rank") <= cfg.hosts_per_round)
-            )
-            cand = cand.join(F.broadcast(hosts_ranked.select("host")), "host")
+        cand = self._select_wave(frontier, host_state)
 
         # ---- F1/F2 gates + J3 metadata join (HEAD phase, O2) -----------
         # join shape: the corpus-side table is streamed against a
@@ -1078,11 +1045,8 @@ class CrawlEngine:
             )
 
         # ---- W4 politeness: per-host attempt timestamps ----------------
-        if cfg.transport is not None:
-            pass  # attempt_ts already assigned inside the live executor
-        elif cfg.fetch_executor == "apply_in_pandas":
-            sel = self._politeness_apply_in_pandas(sel, t_round)
-        else:
+        # (the live executor has already assigned attempt_ts)
+        if cfg.transport is None:
             # native window arithmetic (virtual clock, codegen path)
             start_h = F.greatest(F.lit(t_round), F.col("priority"))
             w_seq = (
@@ -1317,16 +1281,7 @@ class CrawlEngine:
             frontier, sel.select("url"), "url", "left_anti", int(scal["n_att"] or 0)
         )
         # J1: never re-attempt (seen) and never double-queue (pending)
-        seen_filter = cfg.seen_filter or ("bloom" if cfg.use_bloom else "exact")
-        if seen_filter == "cuckoo":
-            from webcrawler_spark.operators.cuckoo import anti_join_with_cuckoo
-
-            new_links = anti_join_with_cuckoo(links, seen, "url")
-        elif seen_filter == "bloom":
-            new_links = anti_join_with_bloom(links, seen, "url")
-        else:
-            new_links = links.join(seen.select("url"), "url", "left_anti")
-        new_links = new_links.join(
+        new_links = links.join(seen.select("url"), "url", "left_anti").join(
             remaining_frontier.select("url"), "url", "left_anti"
         )
 

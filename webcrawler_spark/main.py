@@ -32,8 +32,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--resume", action="store_true", help="resume from snapshot")
     p.add_argument("-d", "--debug", action="store_true", help="print debug JSON")
     p.add_argument("--max-rounds", type=int, default=None)
-    p.add_argument("--bloom", action="store_true", help="Bloom seen pre-filter")
-    p.add_argument("--salt", type=int, default=1, help="mega-host salt fan (O9)")
     p.add_argument(
         "--records-per-file", type=int, default=1000,
         help="output rotation (reference WARC parity: 1000 pages/file)",
@@ -63,8 +61,6 @@ def main(argv=None) -> int:
     cfg = CrawlConfig(
         limit=args.limit,
         max_rounds=args.max_rounds,
-        use_bloom=args.bloom,
-        salt_n=args.salt,
         records_per_file=args.records_per_file,
     )
 

@@ -1,8 +1,9 @@
 """Explicit skew handling — the reusable form of what the engine does
-inline (O9 two-phase salted FIFO selection, engine.py `salt_n`; AQE
-skew-join at runtime). The north rule names "partitioning / shuffle /
-skew handled explicitly"; these operators make the two halves of that
-first-class: MEASURE the skew, then BREAK it.
+inline (O9 per-host top-B selection, planned as a map-side
+WindowGroupLimit before the host exchange; AQE skew-join at runtime).
+The north rule names "partitioning / shuffle / skew handled
+explicitly"; these operators make the two halves of that first-class:
+MEASURE the skew, then BREAK it.
 
 * :func:`key_skew_stats` — the diagnosis: per-key counts, the head
   keys, and the max/mean skew ratio, from two hash aggregates and a
